@@ -7,8 +7,8 @@ Reference:
 - unpivot wide month columns → long records: etl/etl_ida.py:308-372.
 - pivot long → one column per operator group: schema_star.sql:151-160.
 
-Scale notes: ffill partitions by source file (each file's rows are
-independent), so the window never concentrates more than one file on an
+Scale notes: the ETL ffill partitions by sheet (each sheet's rows are
+independent), so the window never concentrates more than one sheet on an
 executor.  Unpivot is Spark's native ``unpivot`` (a single Expand node, no
 shuffle).  Pivot uses an explicit value list so Spark skips the extra
 distinct-values job and column order is deterministic.

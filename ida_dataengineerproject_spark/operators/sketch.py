@@ -180,7 +180,12 @@ def mg_candidates(
     each key into a Python object before hashing it; the dict merge
     below touches only the DISTINCT keys of each batch (≪ rows), and
     the decrement rule is byte-identical to the r6 form, so the
-    superset guarantee and its tests are unchanged."""
+    superset guarantee and its tests are unchanged.
+
+    The key column is selected by name, so ``keys`` may carry other
+    columns in any order; null keys are dropped before the tally (as
+    pandas ``value_counts`` did), so no counter is spent on null and no
+    null candidate is emitted."""
 
     def gen(batches):
         import pyarrow as pa
@@ -189,8 +194,8 @@ def mg_candidates(
         counters: dict = {}
         ktype = None
         for batch in batches:
-            ktype = batch.schema.field(0).type
-            vc = pc.value_counts(batch.column(0))
+            ktype = batch.schema.field(key_col).type
+            vc = pc.value_counts(pc.drop_null(batch.column(key_col)))
             for k, c in zip(
                 vc.field("values").to_pylist(), vc.field("counts").to_pylist()
             ):
@@ -212,7 +217,7 @@ def mg_candidates(
     # would silently stringify e.g. bigint keys, and heavy_hitters' join
     # then compares mismatched types via implicit cast (ADVICE r6)
     out_schema = StructType([keys.schema[key_col]])
-    return keys.mapInArrow(gen, schema=out_schema).distinct()
+    return keys.select(key_col).mapInArrow(gen, schema=out_schema).distinct()
 
 
 def heavy_hitters(

@@ -13,12 +13,15 @@ Reference stages → Spark stages:
   anti-join upsert; surrogate keys are xxhash64 of the natural key
   (deterministic & distributed — identity sequences are not).
 - PostgreSQLLoader.load (op30/37/06, etl_ida.py:461-554): hash dedup,
-  broadcast dim-key resolution (inner joins: unmatched rows silently drop,
-  matching etl_ida.py:550-551), partitioned fact write.
+  dim-key resolution by hash — each fact key is ``_skey`` of the record's
+  natural key, the same expression the dim row is keyed with, so the fact
+  reads no dim; records with a null natural key drop, as the reference's
+  inner joins drop them (etl_ida.py:550-551) — partitioned fact write.
 
 Scale notes: the only shuffles are the dim distincts (tiny) and the fact
-dedup (hash-partitioned).  The ffill window partitions by source file.
-Fact writes partition by (ano) so time-range queries prune files.
+dedup (hash-partitioned); the fact plan joins no dim.  The ffill window
+partitions by sheet (source file, service).  Fact writes partition by
+(ano) so time-range queries prune files.
 """
 
 from __future__ import annotations
@@ -45,10 +48,13 @@ def transform_wide(wide: DataFrame) -> DataFrame:
     """Wide sheet → normalized fact records (the reference's DataRecord
     stream, etl_ida.py:103-122).  Expects columns GRUPO_ECONOMICO, VARIAVEL,
     SERVICO, ARQUIVO_ORIGEM, linha_origem + YYYY-MM month columns."""
+    # op15: merged-cell group names repeat down the sheet.  One file
+    # holds up to three service sheets and linha_origem restarts in each,
+    # so the window is the sheet, as in the reference's per-sheet ffill
     df = forward_fill(
         wide, "GRUPO_ECONOMICO", order_col="linha_origem",
-        partition_cols=["ARQUIVO_ORIGEM"],
-    )  # op15: merged-cell group names repeat down the sheet
+        partition_cols=["ARQUIVO_ORIGEM", "SERVICO"],
+    )
     df = drop_blank_rows(df, "GRUPO_ECONOMICO", "VARIAVEL")  # op11
     long = unpivot_months(
         df,
@@ -127,66 +133,62 @@ def build_dims(records: DataFrame) -> dict[str, DataFrame]:
     }
 
 
+# fact key column → (dim table, records column the dim key hashes)
+_DIM_KEYS = {
+    "tempo_key": ("dim_tempo", "ano_mes"),
+    "grupo_key": ("dim_grupo_economico", "grupo_economico"),
+    "servico_key": ("dim_servico", "servico"),
+    "variavel_key": ("dim_variavel", "variavel"),
+}
+
+
+def project_fact(
+    records: DataFrame, existing_fact: DataFrame | None = None
+) -> DataFrame:
+    """Dedup + dim-key resolution (op30/op37, etl_ida.py:502-554) for
+    records whose dims are built from the same records.
+
+    Hash dedup reproduces ON CONFLICT DO NOTHING, anti-joined against the
+    existing fact for idempotent re-runs.  Each dim key is ``_skey`` of
+    the record's natural key — the very expression ``build_dims`` keys
+    the dim row with — so no dim is read: a record with a non-null
+    natural key always has its dim row.  A null natural key has none (an
+    inner join never matches null), so those records are filtered out,
+    exactly the rows the reference's inner joins drop
+    (etl_ida.py:550-551).  The filter runs before the dedup, so a record
+    that cannot be loaded never wins the dedup over one that can; it also
+    leaves the anti join directly above the dedup aggregate, where the
+    optimizer pushes it below, so a re-ingest dedups only the new
+    records."""
+    natural = [col for _, col in _DIM_KEYS.values()]
+    deduped = dedup_against(
+        records.dropna(subset=natural), existing_fact, ["hash_registro"]
+    )
+    return deduped.select(
+        F.xxhash64("hash_registro").alias("fato_key"),
+        *[_skey(col).alias(key) for key, (_, col) in _DIM_KEYS.items()],
+        F.col("valor").cast("decimal(15,6)").alias("valor"),
+        "arquivo_origem",
+        "linha_origem",
+        F.current_timestamp().alias("data_processamento"),
+        "hash_registro",
+    )
+
+
 def load_fact(
     records: DataFrame,
     dims: dict[str, DataFrame],
     existing_fact: DataFrame | None = None,
-    broadcast_dims: bool = True,
 ) -> DataFrame:
-    """Dedup + dim-key resolution (op30/op37, etl_ida.py:502-554).
-
-    Inner joins against dims (all broadcast: dims are small by
-    construction) reproduce the reference's silent drop of unmatched
-    records; hash dedup reproduces ON CONFLICT DO NOTHING, anti-joined
-    against the existing fact for idempotent re-runs.
-
-    ``broadcast_dims=False`` drops the explicit broadcast hints —
-    callers with a BOUNDED single-partition input (xq41's fixed-sheet
-    audit rebuild) use it so the four dim joins run inside one codegen
-    pipeline instead of spawning four broadcast-exchange sub-jobs;
-    production ingest keeps the default (at scale the hint is the
-    guarantee the 6-row dims never shuffle the fact)."""
-    deduped = dedup_against(records, existing_fact, ["hash_registro"])
-    maybe_b = F.broadcast if broadcast_dims else (lambda df: df)
-    return (
-        deduped.join(maybe_b(dims["dim_tempo"].select("tempo_key", "ano_mes")), "ano_mes")
-        .join(
-            maybe_b(
-                dims["dim_grupo_economico"].select(
-                    "grupo_key", F.col("grupo_codigo").alias("grupo_economico")
-                )
-            ),
-            "grupo_economico",
-        )
-        .join(
-            maybe_b(
-                dims["dim_servico"].select(
-                    "servico_key", F.col("servico_codigo").alias("servico")
-                )
-            ),
-            "servico",
-        )
-        .join(
-            maybe_b(
-                dims["dim_variavel"].select(
-                    "variavel_key", F.col("variavel_codigo").alias("variavel")
-                )
-            ),
-            "variavel",
-        )
-        .select(
-            F.xxhash64("hash_registro").alias("fato_key"),
-            "tempo_key",
-            "grupo_key",
-            "servico_key",
-            "variavel_key",
-            F.col("valor").cast("decimal(15,6)").alias("valor"),
-            "arquivo_origem",
-            "linha_origem",
-            F.current_timestamp().alias("data_processamento"),
-            "hash_registro",
-        )
-    )
+    """``project_fact`` for dims that need not come from ``records``
+    (e.g. a pre-existing, narrower dim set): a fact row is kept only if
+    every dim holds its key — a left-semi membership filter per dim,
+    the reference's silent drop of records with no dim row
+    (etl_ida.py:550-551)."""
+    fact = project_fact(records, existing_fact)
+    for key, (dim, _) in _DIM_KEYS.items():
+        fact = fact.join(dims[dim].select(key), key, "left_semi")
+    return fact
 
 
 def ingest(
@@ -198,21 +200,23 @@ def ingest(
     """Full pipeline: wide sheet(s) → {dims..., fact_ida} lazy DataFrames.
     Mirrors ETLPipeline.run (etl_ida.py:732-834) minus the HTTP fetch.
 
-    ``materialize_records=True`` (r13, opt-in so the default contract
-    stays fully lazy) eagerly checkpoints the normalized record stream
-    before fanning out: the records subtree (ffill window + unpivot
-    Expand + parse/recode) feeds FIVE independent consumers — four dim
-    distincts and the fact dedup — and with ``write_star`` each of the
-    five write jobs re-derived it from the source (the fact job four
-    more times via its lazy dim joins).  Records are O(sheet cells),
-    so the checkpoint is bounded at any corpus scale.  Callers that
-    consume only one output (xq41's audit rebuild) keep the lazy
-    default."""
+    The dims and the fact come from the same records, so the fact's dim
+    keys are hashed from its own natural keys (``project_fact``): the
+    fact plan reads no dim, and no dim is built twice.
+
+    ``materialize_records=True`` (opt-in so the default contract stays
+    fully lazy) eagerly checkpoints the normalized record stream before
+    fanning out: the records subtree (ffill window + unpivot Expand +
+    parse/recode) feeds FIVE independent consumers — four dim distincts
+    and the fact dedup — and with ``write_star`` each of the five write
+    jobs would re-derive it from the source.  Records are O(sheet
+    cells), so the checkpoint is bounded at any corpus scale.  Callers
+    that consume only one output keep the lazy default."""
     records = transform_wide(wide)
     if materialize_records:
         records = records.localCheckpoint(eager=True)
     dims = build_dims(records)
-    fact = load_fact(records, dims, existing_fact)
+    fact = project_fact(records, existing_fact)
     return {**dims, "fact_ida": fact}
 
 

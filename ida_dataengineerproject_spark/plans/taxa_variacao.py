@@ -242,7 +242,10 @@ def _taxa_from_tables(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
 
 
 # DuckDB twin of the pipeline above — identical arithmetic, identical
-# aliases, exact-decimal AVG, so values hash-match bit-exact.
+# aliases, exact-decimal AVG, so values hash-match bit-exact.  Every
+# ROUND gets ``+ 0.0``: DuckDB rounds a small negative double to -0.0,
+# where Spark's round (and the reference's PostgreSQL numeric) gives 0.0;
+# adding +0.0 turns -0.0 into 0.0 and leaves every other value as it is.
 TAXA_VARIACAO_ORACLE_SQL = """
 WITH base AS (
     SELECT strftime(o.o_orderdate, '%Y-%m') AS mes,
@@ -258,7 +261,7 @@ media_mensal AS (
 ),
 media_calc AS (
     SELECT mes,
-           ROUND((valor_medio - prev) / NULLIF(prev, 0) * 100, 2) AS taxa_variacao_media
+           ROUND((valor_medio - prev) / NULLIF(prev, 0) * 100, 2) + 0.0 AS taxa_variacao_media
     FROM (SELECT mes, valor_medio,
                  LAG(valor_medio) OVER (ORDER BY mes) AS prev
           FROM media_mensal)
@@ -271,7 +274,7 @@ grupo_mensal AS (
 ),
 grupo_calc AS (
     SELECT grupo, mes,
-           ROUND((valor_grupo - prev) / NULLIF(prev, 0) * 100, 2) AS variacao
+           ROUND((valor_grupo - prev) / NULLIF(prev, 0) * 100, 2) + 0.0 AS variacao
     FROM (SELECT grupo, mes, valor_grupo,
                  LAG(valor_grupo) OVER (PARTITION BY grupo ORDER BY mes) AS prev
           FROM grupo_mensal)
@@ -280,11 +283,11 @@ grupo_calc AS (
 SELECT g.mes,
        m.taxa_variacao_media,
        MAX(CASE WHEN g.grupo = 'A'
-           THEN ROUND(g.variacao - m.taxa_variacao_media, 2) END) AS grp_a,
+           THEN ROUND(g.variacao - m.taxa_variacao_media, 2) + 0.0 END) AS grp_a,
        MAX(CASE WHEN g.grupo = 'N'
-           THEN ROUND(g.variacao - m.taxa_variacao_media, 2) END) AS grp_n,
+           THEN ROUND(g.variacao - m.taxa_variacao_media, 2) + 0.0 END) AS grp_n,
        MAX(CASE WHEN g.grupo = 'R'
-           THEN ROUND(g.variacao - m.taxa_variacao_media, 2) END) AS grp_r
+           THEN ROUND(g.variacao - m.taxa_variacao_media, 2) + 0.0 END) AS grp_r
 FROM grupo_calc g JOIN media_calc m USING (mes)
 GROUP BY g.mes, m.taxa_variacao_media
 ORDER BY g.mes

@@ -802,9 +802,10 @@ def star_ddl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     trap), and every tiny aggregate stage scheduled 32 shuffle tasks.
     Fix: (1) checkpoint the transformed records ONCE, coalesced to one
     partition, so each branch reuses the materialized 150 rows; (2)
-    drop the dim-join broadcast hints (``load_fact(...,
-    broadcast_dims=False)`` — each hint was a broadcast-build sub-job);
-    (3) execute the bounded audit to its 33-row result inside a scoped
+    resolve the fact's dim keys by hash (``project_fact``: the dims come
+    from the same records, so the fact plan joins no dim — each dim
+    join had been a broadcast-build sub-job); (3) execute the bounded
+    audit to its 33-row result inside a scoped
     AQE-off ``shuffle.partitions=1`` block (AQE materializes every
     exchange as its own job; confs bind at execution, so the frame is
     localCheckpointed inside the scope).  Jobs per invocation 20 → 8;
@@ -816,7 +817,7 @@ def star_ddl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartition(1) sort, 4 jobs) — fewer jobs but a slower wall (2.6 s:
     the serialized one-task pipeline costs more than the jobs saved);
     final coalesce(1) (5.6 s: collapses the union's parallelism)."""
-    from ..plans.etl import build_dims, load_fact, transform_wide
+    from ..plans.etl import build_dims, project_fact, transform_wide
     from ..session import scoped_conf
     from .ingest_e2e import _SVC_OFFSET, _wide_sheet
 
@@ -828,7 +829,7 @@ def star_ddl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         transform_wide(wide).coalesce(1).localCheckpoint(eager=True)
     )
     dims = build_dims(records)
-    fact = load_fact(records, dims, None, broadcast_dims=False)
+    fact = project_fact(records)
     star = {**dims, "fact_ida": fact}
 
     def nulls(c: str) -> F.Column:

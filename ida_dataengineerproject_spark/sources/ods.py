@@ -14,12 +14,17 @@ Plan shape: ``spark.read.format("binaryFile")`` lists the files as rows
 split — and emits normalized LONG rows with a fixed schema (wide sheets
 have per-file month columns, so the long form is the only stable
 distributed contract).  ``long_to_wide`` then pivots back to the wide
-layout ``plans/etl.transform_wide`` expects; the month list is collected
-driver-side (control plane: dozens of values).
+layout ``plans/etl.transform_wide`` expects: the month list is collected
+driver-side (control plane: dozens of values), the long rows are
+hash-partitioned by sheet (file, service), and each task pivots the
+sheets it holds in pandas — the reference's own per-sheet unit
+(etl_ida.py:215-274).
 
 Scale notes: binaryFile loads each file fully into one row — fine for
-spreadsheet-sized inputs (the reference's files are ~10⁵ cells); the
-pivot shuffles on (file, row) keys, evenly spread by construction.
+spreadsheet-sized inputs (the reference's files are ~10⁵ cells).  The
+pivot moves every long row through one shuffle keyed by sheet, and a
+task holds its sheets' long rows in memory while it pivots them: a
+sheet is the unit of work, bounded by the sheet size.
 """
 
 from __future__ import annotations
@@ -29,9 +34,11 @@ import zipfile
 import xml.etree.ElementTree as ET
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .converters import SERVICE_SHEETS, _MONTH_PAT, detect_header_row, normalize_wide
 
@@ -248,29 +255,65 @@ def fetch_ods_long(
     return urls.mapInPandas(gen, LONG_SCHEMA)
 
 
-def long_to_wide(long: DataFrame) -> DataFrame:
-    """Long rows → the wide layout ``plans/etl.transform_wide`` expects.
-    Month columns are dynamic per dataset, so the distinct month list is
-    collected (control plane, dozens of values) and pivoted explicitly —
-    deterministic column order, one shuffle on the row identity keys.
+_ROW_KEYS = [
+    "GRUPO_ECONOMICO", "VARIAVEL", "SERVICO", "ARQUIVO_ORIGEM", "linha_origem",
+]
 
-    The input is materialized ONCE first (r13): this function was
-    already eager (the months collect), but that collect and the pivot
-    each re-ran the upstream lineage — for ``read_ods_long`` a second
-    full parse of every file, for ``fetch_ods_long`` a second FETCH of
-    every resource over the network (guide §6: never pay I/O twice).
-    The long frame is O(sheet cells), so the checkpoint is bounded.
-    Measured sf0.1 (pipeline_ingest_ods phases): months collect
-    0.23 → 0.08 s, pivot+transform 0.51 → 0.35 s."""
+
+def _pivot_sheets(pdf: pd.DataFrame, months: list[str]) -> pd.DataFrame:
+    """Long rows of whole sheets → one wide row per source row (the five
+    row keys, null keys included) with one column per month: the first
+    non-null cell of that (row, month), null when the month is absent.
+    Rows whose cells are all null are kept — they anchor the ffill."""
+    row = pdf.groupby(_ROW_KEYS, dropna=False, sort=False).ngroup().to_numpy()
+    month = pd.Categorical(pdf["ano_mes"], categories=months).codes
+    first = np.unique(row, return_index=True)[1]  # out row i is group i
+    out = pdf[_ROW_KEYS].iloc[first].reset_index(drop=True)
+    cells = pd.DataFrame(
+        {"row": row, "month": month, "v": pdf["valor_raw"].to_numpy()}
+    )
+    cells = cells[cells["v"].notna() & (cells["month"] >= 0)]
+    cells = cells.drop_duplicates(["row", "month"])  # first non-null wins
+    grid = np.full((len(out), len(months)), None, dtype=object)
+    grid[cells["row"].to_numpy(), cells["month"].to_numpy()] = cells["v"].to_numpy()
+    return pd.concat([out, pd.DataFrame(grid, columns=months)], axis=1)
+
+
+def long_to_wide(long: DataFrame) -> DataFrame:
+    """Long rows → the wide layout ``plans/etl.transform_wide`` expects:
+    the five row keys, then one string column per month in sorted order.
+
+    Month columns are dynamic per dataset, so the distinct month list is
+    collected (control plane, dozens of values).  The rows are then
+    hash-partitioned on the sheet (ARQUIVO_ORIGEM, SERVICO) and one
+    ``mapInPandas`` pivots each task's sheets where they sit
+    (``_pivot_sheets``): the result equals
+    ``groupBy(row keys).pivot("ano_mes", months).agg(first("valor_raw"))``
+    — first non-null cell per (row, month), null keys grouped, all-null
+    rows kept — without that plan's sort-based aggregate over five
+    string keys (``first`` on strings has no hash aggregate buffer).
+
+    The input is materialized ONCE first: the months collect and the
+    pivot would each re-run the upstream lineage — for
+    ``read_ods_long`` a second full parse of every file, for
+    ``fetch_ods_long`` a second FETCH of every resource over the
+    network (guide §6: never pay I/O twice).  The long frame is
+    O(sheet cells), so the checkpoint is bounded."""
     long = long.localCheckpoint(eager=True)
     months = sorted(
         r.ano_mes for r in long.select("ano_mes").distinct().collect()
     )
-    return (
-        long.groupBy(
-            "GRUPO_ECONOMICO", "VARIAVEL", "SERVICO",
-            "ARQUIVO_ORIGEM", "linha_origem",
-        )
-        .pivot("ano_mes", months)
-        .agg(F.first("valor_raw"))
+    schema = StructType(
+        [long.schema[k] for k in _ROW_KEYS]
+        + [StructField(m, StringType()) for m in months]
+    )
+
+    def pivot(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # a batch may end mid-sheet: pivot the whole partition at once
+        pdfs = list(batches)
+        if pdfs:
+            yield _pivot_sheets(pd.concat(pdfs, ignore_index=True), months)
+
+    return long.repartition("ARQUIVO_ORIGEM", "SERVICO").mapInPandas(
+        pivot, schema
     )

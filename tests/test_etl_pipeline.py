@@ -106,6 +106,43 @@ def test_dims_and_key_resolution(spark, wide):
     )
 
 
+def test_ingest_fact_keys_join_every_dim(spark, wide):
+    """The fact's hashed keys are the dims' keys: every fact row of
+    ``ingest`` inner-joins all four dims, so resolving keys by hash
+    instead of by join loses no row."""
+    from ida_dataengineerproject_spark.plans.etl import ingest
+
+    star = ingest(spark, wide)
+    fact = star["fact_ida"]
+    n = fact.count()
+    assert n == _records(spark, wide).count()
+    joined = fact
+    for dim, key in [
+        ("dim_tempo", "tempo_key"),
+        ("dim_grupo_economico", "grupo_key"),
+        ("dim_servico", "servico_key"),
+        ("dim_variavel", "variavel_key"),
+    ]:
+        joined = joined.join(star[dim].select(key), key)
+    assert joined.count() == n
+
+
+def test_fact_drops_null_natural_keys(spark, wide):
+    """A record with a null natural key has no dim row (an inner join
+    never matches null), so ``project_fact`` drops it, as the joins
+    did."""
+    from ida_dataengineerproject_spark.plans.etl import project_fact
+
+    rec = _records(spark, wide)
+    nulled = rec.withColumn(
+        "servico",
+        F.when(F.col("grupo_economico") == "OI", F.lit(None)).otherwise(
+            F.col("servico")
+        ),
+    )
+    assert project_fact(nulled).count() == rec.count() - 2
+
+
 def test_silent_drop_on_missing_dim(spark, wide):
     """Records whose dim key is absent are silently dropped (inner-join
     semantics, etl_ida.py:550-551)."""

@@ -232,3 +232,40 @@ def test_fetch_ods_long_distributed(spark, tmp_path):
         (r.ano_mes, r.linha_origem): r.valor_raw for r in rows
     }
     assert vals[("2019-01", 1)] == "10,5" and vals[("2019-02", 2)] == "-"
+
+
+def test_ffill_stays_within_sheet(spark, tmp_path):
+    """One file with two service sheets: linha_origem restarts at 1 in
+    each, so a file-wide ffill window ties rows of different sheets and
+    leaks the SMP group ACME into the Fixo sheet's leading blanks.  The
+    reference ffills each sheet on its own (etl_ida.py:249), so those
+    blank-group Fixo rows have no group and drop."""
+    from ida_dataengineerproject_spark.plans.etl import transform_wide
+    from ida_dataengineerproject_spark.sources.ods import (
+        long_to_wide,
+        read_ods_long,
+        write_minimal_ods,
+    )
+
+    header = ["GRUPO ECONOMICO", "VARIAVEL", "2019-01"]
+    var = "Taxa de Respondidas em 5 dias Úteis"
+    write_minimal_ods(
+        str(tmp_path / "ida_2019.ods"),
+        {
+            "Móvel_Pessoal": [header, ["ACME", var, "1,0"], [None, var, "2,0"],
+                              [None, var, "3,0"]],
+            "Fixo": [header, [None, var, "4,0"], [None, var, "5,0"],
+                     ["OUTRA", var, "6,0"]],
+        },
+    )
+    rec = transform_wide(long_to_wide(read_ods_long(spark, str(tmp_path))))
+    got = sorted(
+        (r.servico, r.grupo_economico, r.linha_origem, float(r.valor))
+        for r in rec.collect()
+    )
+    assert got == [
+        ("SMP", "ACME", 1, 1.0),
+        ("SMP", "ACME", 2, 2.0),
+        ("SMP", "ACME", 3, 3.0),
+        ("STFC", "OUTRA", 3, 6.0),
+    ]

@@ -825,3 +825,33 @@ def test_q21_bucketed_order_grain_agg_is_exchange_free(spark):
     assert "hashpartitioning(o_orderkey" not in plan
     # the only hash exchange left carries the tiny survivor set
     assert "hashpartitioning(s_name" in plan
+
+
+def test_ods_ingest_plans_pivot_by_sheet_and_hash_fact_keys(spark, tmp_path):
+    """The ODS records plan pivots each sheet in one Arrow pass — no
+    sort-based aggregate (``first`` over string month cells has no hash
+    buffer) — and the ingest fact resolves its dim keys by hash: its
+    plan joins no dim, so no dim is broadcast."""
+    from ida_dataengineerproject_spark.plans.etl import ingest, transform_wide
+    from ida_dataengineerproject_spark.sources.ods import (
+        long_to_wide,
+        read_ods_long,
+        write_minimal_ods,
+    )
+
+    sheet = [
+        ["GRUPO ECONOMICO", "VARIAVEL", "2019-01", "2019-02"],
+        ["ACME", "Taxa de Respondidas em 5 dias Úteis", "10,5", "12,0"],
+        [None, "Taxa de Respondidas em 5 dias Úteis", "7,25", "-"],
+    ]
+    write_minimal_ods(str(tmp_path / "smp.ods"), {"Móvel_Pessoal": sheet})
+    wide = long_to_wide(read_ods_long(spark, str(tmp_path)))
+
+    records = _plan(transform_wide(wide))
+    assert _nodes(records, "SortAggregate") == 0
+    # the pivot; the parse sits behind long_to_wide's checkpoint
+    assert _nodes(records, "MapInPandas") == 1
+
+    fact = _plan(ingest(spark, wide)["fact_ida"])
+    assert _nodes(fact, "BroadcastExchange") == 0
+    assert "Join" not in fact

@@ -697,3 +697,57 @@ def test_kmv_overlap_complete_sketches_exact(spark, sa, sb):
     out = kmv_overlap(sk, k=64).collect()
     assert len(out) == 1
     assert out[0].est_inter == float(len(sa & sb))
+
+
+# each sheet (ARQUIVO_ORIGEM, SERVICO) has its own months, disjoint from
+# every other sheet's, as files of different years have
+_SHEET_MONTHS = {
+    ("f1.ods", "SMP"): ["2019-01", "2019-02"],
+    ("f1.ods", "STFC"): ["2019-03"],
+    ("f2.ods", "SMP"): ["2020-01", "2020-02", "2020-03"],
+}
+_long_cell = st.tuples(
+    st.sampled_from([None, "ACME", "OUTRA"]),  # GRUPO_ECONOMICO
+    st.sampled_from([None, "V1", "V2"]),  # VARIAVEL
+    st.sampled_from(sorted(_SHEET_MONTHS)),
+    st.integers(1, 3),  # linha_origem
+    st.integers(0, 2),  # month, an index into the sheet's months
+    st.one_of(st.none(), st.text("0123456789,-", min_size=1, max_size=4)),
+    st.integers(0, 2),  # extra null copies of this (row, month) cell
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(st.lists(_long_cell, min_size=1, max_size=30))
+def test_long_to_wide_matches_groupby_pivot(spark, cells):
+    """The per-sheet pandas pivot equals the expression it replaced,
+    ``groupBy(row keys).pivot("ano_mes", months).agg(first("valor_raw"))``:
+    same schema and column order, null group keys grouped, all-null rows
+    kept, months a sheet lacks null, and of duplicate (row, month) cells
+    the one non-null value kept."""
+    from pyspark.sql import functions as F
+
+    from ida_dataengineerproject_spark.sources.ods import LONG_SCHEMA, long_to_wide
+
+    keys = ["GRUPO_ECONOMICO", "VARIAVEL", "SERVICO", "ARQUIVO_ORIGEM", "linha_origem"]
+    seen, rows, null_copies = set(), [], []
+    for grupo, var, (arquivo, servico), linha, m, value, copies in cells:
+        months = _SHEET_MONTHS[(arquivo, servico)]
+        row = (grupo, var, servico, arquivo, linha, months[m % len(months)])
+        if value is not None:
+            if row in seen:
+                continue  # one non-null value per (row, month), or first() is arbitrary
+            seen.add(row)
+        rows.append(row + (value,))
+        null_copies += [row + (None,)] * copies
+    # null copies on both sides of the non-null cell
+    data = null_copies[::2] + rows + null_copies[1::2]
+    long = spark.createDataFrame(data, LONG_SCHEMA).repartition(3)
+
+    months = sorted({r[5] for r in data})
+    want = long.groupBy(*keys).pivot("ano_mes", months).agg(F.first("valor_raw"))
+    got = long_to_wide(long)
+
+    assert got.schema == want.schema
+    key = lambda r: tuple(str(v) for v in r)  # noqa: E731
+    assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))

@@ -281,3 +281,31 @@ def test_mg_candidates_preserves_bigint_key_type(spark):
     must_have = {k for k, c in truth.items() if c > n / 17}
     got = {r["key"] for r in cands.collect()}
     assert must_have <= got
+
+
+def test_mg_candidates_selects_key_column_by_name(spark):
+    """The key column need not be the first column: a frame whose first
+    column is a constant must still yield the skewed key's candidates."""
+    keys = spark.range(2_000).select(
+        F.lit("const").alias("other"),
+        F.when(F.col("id") % 2 == 0, F.lit("hot"))
+        .otherwise(F.col("id").cast("string"))
+        .alias("key"),
+    )
+    cands = mg_candidates(keys.repartition(2), 8)
+    assert cands.columns == ["key"]
+    got = {r["key"] for r in cands.collect()}
+    assert "hot" in got and "const" not in got
+
+
+def test_mg_candidates_yields_no_null_candidate(spark):
+    """Null keys are not keys: a stream whose commonest value is null
+    yields no null candidate, and the real heavy hitter survives."""
+    keys = spark.range(2_000).select(
+        F.when(F.col("id") % 2 == 0, F.lit(None).cast("string"))
+        .when(F.col("id") % 4 == 1, F.lit("hot"))
+        .otherwise(F.col("id").cast("string"))
+        .alias("key"),
+    )
+    got = [r["key"] for r in mg_candidates(keys.repartition(2), 8).collect()]
+    assert None not in got and "hot" in got
