@@ -88,11 +88,12 @@ def count_triangles(
 ) -> DataFrame:
     """Exact triangle count of an undirected simple graph — one row,
     column ``n_triangles`` (plus ``n_nodes``/``n_edges`` when
-    ``with_graph_stats``).  No self-loops; with ``edges_unique`` each
-    undirected edge appears once (either direction), with
-    ``edges_unique=False`` duplicate pairs are allowed and dedup is
-    folded into the adjacency build (a ``collect_set`` in the shuffle
-    that builds it anyway) — one full distinct pass saved.
+    ``with_graph_stats``).  Self-loops and edges with a NULL endpoint are
+    dropped (a node seen only on them is not counted in ``n_nodes``);
+    with ``edges_unique`` each undirected edge appears once (either
+    direction), with ``edges_unique=False`` duplicate pairs are allowed
+    and dedup is folded into the adjacency build (a ``collect_set`` in
+    the shuffle that builds it anyway) — one full distinct pass saved.
 
     Degree-ordered orientation (Cohen's MapReduce scheme): orient every
     edge from its lower-(degree, id) endpoint to the higher, making the
@@ -165,7 +166,12 @@ def count_triangles(
 
     spark = edges.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
-    und = edges.select(F.col(src).alias("p1"), F.col(dst).alias("p2"))
+    # a self-loop closes no triangle; dropped here, once, so both
+    # regimes see the same simple graph (the huge regime would otherwise
+    # orient (u, u) and count u's whole out-adjacency as triangles)
+    und = edges.select(F.col(src).alias("p1"), F.col(dst).alias("p2")).filter(
+        F.col("p1") != F.col("p2")
+    )
     # two consumers in either regime — materialize once.  DISK_ONLY,
     # not the MEMORY_AND_DISK(deserialized) default: at x100 the edge
     # snapshot is 10⁸ rows, and deserialized block storage pins

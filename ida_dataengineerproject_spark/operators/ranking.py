@@ -100,7 +100,7 @@ def _with_buckets_fused(
     only for roughly-uniform value distributions — heavy value skew
     concentrates rows in few buckets and fattens the in-bucket window
     task.  Callers with unknown/skewed distributions should keep the
-    eager quantile probe (``fused=False``); correctness is unaffected
+    eager quantile probe (``_with_buckets``); correctness is unaffected
     either way (buckets only balance work).  Same contract as
     ``_with_buckets``: monotone buckets (equal values share one),
     NULLs in dedicated bucket -1.  A constant column (max == min)
@@ -187,17 +187,13 @@ def grouped_quantiles(
     quantiles: dict[str, float],
     n_buckets: int = 32,
     bounds: list[float] | None = None,
-    fused: bool = False,
 ) -> DataFrame:
     """Exact continuous quantiles (``quantile_cont`` semantics — linear
     interpolation at position q·(n−1)) per group, WITHOUT a per-group
     sort buffer: one grouped two-level rank (bounded windows only), one
     broadcast of the (groups × quantiles) target-rank frame, one
     filtered interpolating aggregate.  Returns one row per group with a
-    column per ``quantiles`` key.  ``fused=True`` embeds the boundary
-    probe in the plan (_with_buckets_fused — equal-width min/max bins,
-    no eager approxQuantile job); right for roughly-uniform value
-    columns, see that docstring for the skew tradeoff.
+    column per ``quantiles`` key.
 
     NULL values are excluded, matching SQL ``median``/``percentile``.
     The scale-safe replacement for ``percentile(col, array(...))``
@@ -213,11 +209,7 @@ def grouped_quantiles(
     scanned, never shuffled."""
     g = list(group_cols)
     src = df.select(*g, value_col).filter(F.col(value_col).isNotNull())
-    wb = (
-        _with_buckets_fused(src, value_col, n_buckets)
-        if fused and bounds is None
-        else _with_buckets(src, value_col, n_buckets, bounds)
-    )
+    wb = _with_buckets(src, value_col, n_buckets, bounds)
     counts = wb.groupBy(*g, "__bucket").agg(F.count("*").alias("__n"))
     w_off = Window.partitionBy(*g).orderBy("__bucket").rowsBetween(
         Window.unboundedPreceding, -1
@@ -497,7 +489,6 @@ def weighted_quantile_crossing(
     n_buckets: int = 32,
     out_col: str = "weighted_median",
     total_col: str = "w_total",
-    fused: bool = True,
 ) -> DataFrame:
     """One-row frame (out_col, total_col): the smallest value whose
     cumulative weight in value order reaches q_num/q_den of the total —
@@ -511,10 +502,9 @@ def weighted_quantile_crossing(
     window.  No full-data shuffle, no prefix sum over every row —
     against ``SUM(w) OVER (ORDER BY v)``'s single-partition sort.
 
-    ``fused`` (default) embeds the boundary probe in the SAME plan
-    (_with_buckets_fused) — no eager driver-side approxQuantile job;
-    the r8 profile showed that eager job was 0.58 s of xq8's 1.00 s
-    wall at sf0.1.
+    The boundary probe runs in the SAME plan (_with_buckets_fused) — no
+    eager driver-side approxQuantile job; the r8 profile showed that
+    eager job was 0.58 s of xq8's 1.00 s wall at sf0.1.
 
     Duplicate values need no pre-aggregation: the filtered set is a
     suffix of the value order, so MIN(value) over it is the crossing
@@ -522,11 +512,7 @@ def weighted_quantile_crossing(
     src = df.select(value_col, weight_col).filter(
         F.col(value_col).isNotNull()
     )
-    wb = (
-        _with_buckets_fused(src, value_col, n_buckets)
-        if fused
-        else _with_buckets(src, value_col, n_buckets)
-    )
+    wb = _with_buckets_fused(src, value_col, n_buckets)
     bt = wb.groupBy("__bucket").agg(F.sum(weight_col).alias("__w"))
     w_off = Window.orderBy("__bucket").rowsBetween(
         Window.unboundedPreceding, -1

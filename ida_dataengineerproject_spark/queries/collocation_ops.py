@@ -201,51 +201,3 @@ def q_x22(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jaccard"),
         )
     )
-
-
-def corpus_source_jaccard_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x22's sketch twin: source × source Jaccard from threshold-filtered
-    KMV sketches (operators/sketch.py::kmv_sketch_filtered) instead of
-    the exact per-shingle source-set aggregate.
-
-    NOT the bench override — measured at sf0.1 it LOSES to the exact
-    hashed form (2.43 s vs 1.17 s): this corpus is scan-dominated and
-    the sketch build pays a second full scan (HLL pass + filter pass)
-    to collapse a shuffle that wasn't the bottleneck.  The sketch form
-    is the right arm only when per-group distinct cardinality makes the
-    exact groupBy(g) shuffle spill (its shuffle is O(groups × margin × k)
-    vs the exact O(distinct shingles)); the adjudication with these
-    numbers lives in BASELINE.md.  Estimator: est_jaccard =
-    est_inter / (n̂_a + n̂_b − est_inter), all three terms from the same
-    sketches — rse ≈ 1/√(k−1) ≈ 3% at k=1024, inflated on low-overlap
-    pairs by the Jaccard factor.  Accuracy vs the exact form is pinned
-    by tests/test_streaming_sketches.py::test_kmv_filtered_*."""
-    from ..functions.textstats import ngram_shingles
-    from ..operators.sketch import kmv_overlap, kmv_sizes, kmv_sketch_filtered
-
-    K = 1024
-    docs = table(spark, sf_dir, "documents")
-    sh = docs.select(
-        "source",
-        F.explode(
-            F.transform(ngram_shingles("text", SHINGLE_K), lambda s: F.xxhash64(s))
-        ).alias("g"),
-    )
-    sk = kmv_sketch_filtered(sh, "source", "g", k=K).localCheckpoint()
-    inter = kmv_overlap(sk, k=K)
-    sizes = kmv_sizes(sk, k=K)
-    sa = sizes.select(F.col("g").alias("g_a"), F.col("est_n").alias("na"))
-    sb = sizes.select(F.col("g").alias("g_b"), F.col("est_n").alias("nb"))
-    return (
-        inter.join(F.broadcast(sa), "g_a")
-        .join(F.broadcast(sb), "g_b")
-        .select(
-            F.col("g_a").alias("src_a"),
-            F.col("g_b").alias("src_b"),
-            F.col("est_inter").alias("n_inter"),
-            (
-                F.col("est_inter")
-                / (F.col("na") + F.col("nb") - F.col("est_inter"))
-            ).alias("jaccard"),
-        )
-    )

@@ -42,19 +42,18 @@ def write_zorder_partitioned(
     b: str,
     num_buckets: int,
     path: str,
-    compress: bool = True,
 ) -> None:
     """Z-order-cluster `df` on (a, b) and write it partitioned by the
     range-bucket id: one directory per curve bucket, rows inside each
     sorted along the curve — the layout ``pruned_read`` skips over.
-    ``compress`` (default) order-preservingly maps 64-bit ids into the
-    curve's 31-bit dimensions (operators/zorder.compress_ranges) — the
-    manifest and pruning read the ORIGINAL column values, so pruning
-    correctness never depends on the curve coordinates."""
+    64-bit ids are order-preservingly mapped into the curve's 31-bit
+    dimensions (operators/zorder.compress_ranges) — the manifest and
+    pruning read the ORIGINAL column values, so pruning correctness
+    never depends on the curve coordinates."""
     from ..operators.zorder import cluster_by_zorder
 
     clustered = cluster_by_zorder(
-        df, a, b, num_buckets, compress=compress, keep_bucket=True
+        df, a, b, num_buckets, compress=True, keep_bucket=True
     )
     clustered.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
 

@@ -340,3 +340,84 @@ def test_fingerprint_sql_twin_matches(spark):
         F.expr(FINGERPRINT_SQL) != text_fingerprint("text")
     ).count()
     assert n == 0
+
+
+# ------------------------------------------------------------ null input
+# A NULL text or vector has no signature, bucket or list: each scale path
+# must drop the row and answer exactly as if the row were absent (the
+# Arrow kernels used to raise on it).
+
+_NULL_ID = 10**9
+
+
+def _with_null(df, id_col: str, val_col: str):
+    null_row = df.sparkSession.createDataFrame(
+        [(_NULL_ID,)], f"{id_col} long"
+    ).withColumn(val_col, F.lit(None).cast(dict(df.dtypes)[val_col]))
+    return df.select(id_col, val_col).unionByName(null_row)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_simhash_pairs_drops_null_text(spark):
+    from ida_dataengineerproject_spark.operators.dedup import simhash_pairs
+
+    d = _docs(spark).select("doc_id", "text")
+    want = _rows(simhash_pairs(d, "doc_id", "text"))
+    assert want
+    got = simhash_pairs(_with_null(d, "doc_id", "text"), "doc_id", "text")
+    assert _rows(got) == want
+
+
+def _emb(spark):
+    from ida_dataengineerproject_spark.sources.tables import table
+
+    return table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
+
+
+def test_cosine_topk_lsh_drops_null_vectors(spark):
+    from ida_dataengineerproject_spark.operators.similarity import cosine_topk_lsh
+
+    emb = _emb(spark)
+    queries = emb.filter(F.col("vec_id") < 5)
+    want = _rows(cosine_topk_lsh(emb, queries, k=5))
+    assert want
+    got = cosine_topk_lsh(
+        _with_null(emb, "vec_id", "embedding"),
+        _with_null(queries, "vec_id", "embedding"),
+        k=5,
+    )
+    assert _rows(got) == want
+
+
+def test_cosine_topk_ivf_drops_null_vectors(spark):
+    from ida_dataengineerproject_spark.operators.similarity import cosine_topk_ivf
+
+    emb = _emb(spark)
+    queries = emb.filter(F.col("vec_id") < 5)
+    want = _rows(cosine_topk_ivf(emb, queries, k=5, n_centroids=8, n_probe=4))
+    assert want
+    got = cosine_topk_ivf(
+        _with_null(emb, "vec_id", "embedding"),
+        _with_null(queries, "vec_id", "embedding"),
+        k=5,
+        n_centroids=8,
+        n_probe=4,
+    )
+    assert _rows(got) == want
+
+
+def test_embedding_neardup_pairs_lsh_drops_null_vectors(spark):
+    from ida_dataengineerproject_spark.operators.similarity import (
+        embedding_neardup_pairs_lsh,
+    )
+
+    emb = _emb(spark)
+    want = _rows(embedding_neardup_pairs_lsh(emb, threshold=0.4))
+    assert want
+    got = embedding_neardup_pairs_lsh(
+        _with_null(emb, "vec_id", "embedding"), threshold=0.4
+    )
+    assert _rows(got) == want

@@ -88,6 +88,18 @@ def test_count_triangles_k4_plus_pendant(spark):
     assert count_triangles(df).collect()[0]["n_triangles"] == 4
 
 
+def test_count_triangles_regimes_agree_on_self_loops(spark):
+    """A self-loop closes no triangle: both sides of the size gate must
+    count the one triangle (1, 2, 3), as the naive count does."""
+    from ida_dataengineerproject_spark.operators.graph import count_triangles
+
+    edges = [(1, 2), (2, 3), (1, 3), (3, 4), (3, 3)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    small = count_triangles(df).collect()[0]["n_triangles"]
+    huge = count_triangles(df, broadcast_limit_bytes=0).collect()[0]["n_triangles"]
+    assert small == huge == _naive_triangles(edges[:-1]) == 1
+
+
 def test_count_triangles_arm_selection_pre_build(spark):
     """The broadcast/shuffle handoff must be decided BEFORE the adjacency
     materializes (r8: at x100 the hash-aggregate build OOMed a 16 g JVM

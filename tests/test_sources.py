@@ -78,6 +78,40 @@ def test_bootstrap_and_health(spark):
     assert not status["no_such_table"]
 
 
+def test_bootstrap_star_round_trip(spark, tmp_path):
+    """op07 star path: ingest → write_star → bootstrap_star →
+    health_check.  Every star table must answer from the written files."""
+    from ida_dataengineerproject_spark.plans.bootstrap import (
+        STAR_TABLES,
+        bootstrap_star,
+        health_check,
+    )
+    from ida_dataengineerproject_spark.plans.etl import ingest, write_star
+    from ida_dataengineerproject_spark.sources.converters import (
+        normalize_wide,
+        wide_to_spark,
+    )
+
+    sheet = pd.DataFrame(
+        {
+            "Grupo Econômico": ["CLARO S.A.", "OI S.A."],
+            "Variável": ["Taxa de Respondidas em 5 dias Úteis"] * 2,
+            "2017-01": ["1,5", "2,5"],
+        }
+    )
+    wide = normalize_wide(sheet, "SMP", "SMP_2017.ods")
+    star = ingest(spark, wide_to_spark(spark, wide))
+    write_star(star, str(tmp_path))
+    names = bootstrap_star(spark, str(tmp_path))
+    try:
+        assert names == STAR_TABLES
+        assert health_check(spark, names) == dict.fromkeys(STAR_TABLES, True)
+        assert spark.table("fact_ida").count() == star["fact_ida"].count() == 2
+    finally:
+        for name in names:
+            spark.catalog.dropTempView(name)
+
+
 def test_csv_jsonl_roundtrip_and_quarantine(spark, tmp_path):
     """CSV/JSONL scan wrappers: explicit schema, malformed rows
     quarantined (not failures), parquet normalization round-trips."""
